@@ -306,8 +306,10 @@ def run_per_query(
             timings[name] = round(time.time() - t0, 3)
             loads[name] = [round(load_before, 2), round(os.getloadavg()[0], 2)]
         for name in PER_QUERY:
-            df = ALL_QUERIES[name](spark, sf_dir)
+            # construction is timed too: shared() checkpoints run eagerly
+            # inside the query builder
             t0 = time.time()
+            df = ALL_QUERIES[name](spark, sf_dir)
             try:
                 df.agg(
                     F.sum(F.xxhash64(*[F.col(c) for c in df.columns]))

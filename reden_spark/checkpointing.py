@@ -52,50 +52,17 @@ def checkpoint_mode() -> str:
     return env
 
 
-def shared(df: DataFrame, arrays: bool = False) -> DataFrame:
+def shared(df: DataFrame) -> DataFrame:
     """Materialization point for a subtree consumed by several branches of ONE
-    downstream query (the links stage's members/colored/edges/survivors, the
-    dedup signature/shingle frames). ``arrays``: the frame carries array-typed
-    columns (columnar cache encoding is expensive for those — see 'hybrid').
+    downstream query (the links stage's members/colored/edges, the dedup
+    signature and candidate-pair frames): the eager :func:`checkpoint`.
 
-    Default ('eager'): the eager checkpoint barrier of :func:`checkpoint` —
-    measured best on this host (interleaved A/B, BENCH.md round 4: cold
-    kg_links 17.5 s eager vs 20.6 s lazy median at equal load).
-
-    ``REDEN_SHARED_SUBTREE=lazy`` switches to a lazy
-    ``persist(MEMORY_AND_DISK)``: no barrier job is submitted; the subtree
-    materializes inside the one consuming query, and concurrent AQE stage
-    materializations dedupe at the block manager's per-partition locks (each
-    cached partition computed exactly once — unlike a lazy
-    ``localCheckpoint``, which re-executes the whole upstream once per
-    concurrent consumer, the round-2 trap). The A/B showed the columnar
-    cache build of the array-typed members frame costs more than the ~5
-    barrier jobs it saves at this scale; kept as the measurement knob because
-    the trade reverses when per-job latency dominates (very small inputs) or
-    on a cluster whose driver round-trips are slower than its executors.
-
-    ``REDEN_SHARED_SUBTREE=hybrid`` splits by the caller's ``arrays`` hint:
-    narrow string/numeric frames (colored/edges/survivors — cheap to encode
-    columnar) go lazy persist, while array-typed frames (members, dedup
-    signature/shingle frames — whose columnar cache build is what made full
-    lazy lose the A/B) keep the eager checkpoint.
-
-    Never a lazy localCheckpoint. Under a non-local ``checkpoint_mode``
-    (reliable/persist) `shared` always defers to :func:`checkpoint`."""
-    if not shared_is_lazy(arrays):
-        return checkpoint(df)
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
-def shared_is_lazy(arrays: bool = False) -> bool:
-    """True when :func:`shared` would materialize a frame with this ``arrays``
-    hint via lazy persist (no barrier job). Callers that overlap
-    eager-checkpoint jobs with driver threads use this to skip the (pointless
-    under lazy) thread pool."""
-    if checkpoint_mode() != "local":
-        return False
-    mode = os.environ.get("REDEN_SHARED_SUBTREE", "eager")
-    return mode == "lazy" or (mode == "hybrid" and not arrays)
+    The barrier stops AQE's concurrent stage submission from re-executing the
+    subtree once per consumer (what a lazy localCheckpoint does). A lazy
+    ``persist`` variant (no barrier job) and a hybrid by column type lost
+    interleaved A/Bs on a 32-core host (BENCH.md round 4) and on a 4-core
+    host (CHANGES.md), and were removed."""
+    return checkpoint(df)
 
 
 def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:

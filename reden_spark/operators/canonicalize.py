@@ -18,6 +18,7 @@ max_iter without a fixpoint raises instead of silently returning wrong labels.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,7 +34,7 @@ def _driver_union_find(rows, spark) -> DataFrame:
     fixed cost left in the triples stage after the layout work; equivalence
     graphs are KB-sized (sameAs + dico co-membership), not corpus-sized, so
     they are almost always under the threshold. Semantics identical: canonical
-    = min URI of the component."""
+    = min URI of the component, string-typed columns (uri, canonical)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -52,11 +53,16 @@ def _driver_union_find(rows, spark) -> DataFrame:
     verts = {v for r in rows for v in (r[0], r[1])}
     for v in verts:
         members.setdefault(find(v), []).append(v)
-    out = []
+    uris: list[str] = []
+    canonicals: list[str] = []
     for group in members.values():
-        canonical = min(group)
-        out.extend((v, canonical) for v in group)
-    return spark.createDataFrame(out, "uri string, canonical string")
+        uris.extend(group)
+        canonicals.extend([min(group)] * len(group))
+    # an Arrow table becomes a JVM-side relation: consumers scan it in
+    # compiled code, where a list of tuples would be a pickled Python RDD
+    # that every consuming job re-reads through Python workers
+    table = pa.table({"uri": pa.array(uris, pa.string()), "canonical": pa.array(canonicals, pa.string())})
+    return spark.createDataFrame(table)
 
 
 def connected_components(

@@ -5,7 +5,12 @@ Engine-portability note: hash primitives are md5 hex strings (identical in Spark
 and DuckDB), so every operator — SimHash included (60-bit md5-derived token
 hash) — has an exact DuckDB oracle; min/max over hex strings is lexicographic
 and deterministic. All operators are pure
-DataFrame expressions (whole-stage codegen; no Python in the hot path).
+DataFrame expressions: no Python runs per row. Not all of it is compiled,
+though: Spark's higher-order functions (`transform`, `filter`, `exists`,
+`aggregate`, `array_sort` with a comparator) are CodegenFallback and are
+interpreted per array element. The MinHash signature pass therefore avoids
+them: shingle occurrences are exploded into rows and the per-hash minima are
+plain hash-aggregate expressions, which whole-stage codegen compiles.
 
 Scale notes:
   * exact dedup = one hash-shuffle on the content key;
@@ -40,20 +45,25 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
+# Normalized word list of the `text` column (NULL as ''), the one tokenization
+# every shingle formula here shares with its DuckDB oracle.
+WORDS = "split(trim(regexp_replace(lower(coalesce(text, '')), '\\\\W+', ' ')), ' ')"
+
+
 def word_shingles(col, n: int):
     """Word n-gram shingles of the `text` column as array<string> (distinct,
     sorted). Expressed as a SQL lambda chain so the DuckDB oracle can mirror the
-    exact same formula."""
+    exact same formula. The lambdas are interpreted per element (HOFs are
+    CodegenFallback); :func:`minhash_signatures` states the same shingles as
+    exploded rows instead, which whole-stage codegen compiles."""
     del col  # shingles always read the `text` column (SQL-parity formula below)
-    words = "split(trim(regexp_replace(lower(coalesce(text, '')), '\\\\W+', ' ')), ' ')"
     # NB: Spark's sequence(1, 0) is DESCENDING (not empty) — guard short texts.
     # The split is bound to a lambda variable `w` via a 1-element-array
     # transform so it evaluates ONCE per row: textually inlining it in the
     # gram lambda re-runs the regexp+split per shingle ELEMENT (~n_words
-    # evaluations per doc — the digest-pass hazard minhash_signatures already
-    # documents, measured ~30x on the 2 M-doc corpus for the same shape).
+    # evaluations per doc, measured ~30x on the 2 M-doc corpus).
     grams = F.expr(
-        f"flatten(transform(array({words}), w -> "
+        f"flatten(transform(array({WORDS}), w -> "
         f"case when size(w) >= {n} then "
         f"transform(sequence(1, size(w) - {n - 1}), "
         f"i -> array_join(slice(w, i, {n}), ' ')) "
@@ -91,31 +101,39 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 12, shingle_n: int = 3) 
     The permutation family replaces the earlier md5-per-(hash, shingle)
     formula: the digest pass over the corpus — the dominant cost of dedup at
     scale — runs once instead of n_hashes times (measured ~3x on the sf0.1
-    contract corpus), and the permutations are whole-stage-codegen integer
-    arithmetic. Multiplier (<2^24) x base (<2^31) stays well inside bigint.
-    The DuckDB oracles state the identical formula
+    contract corpus). Multiplier (<2^24) x base (<2^31) stays well inside
+    bigint. The DuckDB oracles state the identical formula
     (('0x' || substr(md5(s),1,15))::BIGINT on that side — verified equal to
     Spark's conv(substring(md5(s),1,15),16,10)).
 
-    Empty-shingle docs get no row and are excluded.
+    Plan shape: no higher-order function. Each shingle OCCURRENCE becomes a
+    row (explode of sequence(1, n_words - n + 1) over the :data:`WORDS` list),
+    b(s) is computed per row, and the signature is one hash aggregate of
+    n_hashes min() columns per doc — all whole-stage codegen. Repeated
+    occurrences of a shingle cannot change a min, so this equals the min over
+    the distinct shingle set of :func:`word_shingles`.
+
+    Docs with fewer than shingle_n words have no shingle, get no row and are
+    excluded.
     """
-    sh = _fan_out(docs).select(
-        "doc_id", "text", word_shingles(F.col("text"), shingle_n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    # hv as its own projection step: inlining the digest inside the per-h
-    # lambda would re-run the md5 pass n_hashes times (Catalyst does not hoist
-    # the common subexpression out of a nested transform)
-    sh = sh.withColumn(
-        "hv",
+    n = shingle_n
+    words = _fan_out(docs).select("doc_id", F.expr(WORDS).alias("w"))
+    # the guard keeps sequence(1, 0) — DESCENDING in Spark — from emitting
+    # short docs
+    starts = F.expr(f"case when size(w) >= {n} then sequence(1, size(w) - {n - 1}) else array() end")
+    occ = words.select("doc_id", "w", F.explode(starts).alias("i"))
+    base = occ.select(
+        "doc_id",
         F.expr(
-            f"transform(shingles, s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint) % {MINHASH_P}L)"
-        ),
+            f"cast(conv(substring(md5(array_join(slice(w, i, {n}), ' ')), 1, 15), 16, 10) as bigint)"
+            f" % {MINHASH_P}L"
+        ).alias("b"),
     )
-    sig = F.expr(
-        f"transform(sequence(0, {n_hashes - 1}), "
-        f"h -> array_min(transform(hv, b -> ((1 + h*1000003) * b + 12345 + h*7919) % {MINHASH_P}L)))"
-    )
-    return sh.select("doc_id", "shingles", sig.alias("sig"))
+    perms = [
+        F.min((F.lit(1 + h * 1000003) * F.col("b") + F.lit(12345 + h * 7919)) % F.lit(MINHASH_P))
+        for h in range(n_hashes)
+    ]
+    return base.groupBy("doc_id").agg(F.array(*perms).alias("sig"))
 
 
 # last auto-salt decision (observability hook for tests and operators: a
@@ -167,25 +185,14 @@ def minhash_lsh_pairs(
     skip the probe (salt=1 pins the unsalted plan).
     """
     r = n_hashes // bands
-    # signatures are consumed 3x (banding + both sides of the verification
-    # join); shared() materializes the digest pass once — eager checkpoint by
-    # default, lazy persist under REDEN_SHARED_SUBTREE=lazy (never a lazy
-    # localCheckpoint, which re-executes the whole signature computation per
-    # concurrent AQE consumer)
-    sigs = shared(minhash_signatures(docs, n_hashes, shingle_n), arrays=True)
-    banded = sigs.select(
-        "doc_id",
-        "shingles",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), b -> md5(concat(cast(b as string), '#', "
-                f"array_join(transform(slice(sig, b*{r}+1, {r}), x -> cast(x as string)), ','))))"
-            )
-        ).alias("band_key"),
-    )
-    # dedupe candidate PAIRS on ids only, then re-attach shingle arrays once per
-    # side — shuffling/distinct-ing the full arrays through the band join is the
-    # expensive anti-pattern this avoids
+    # signatures feed the band probe and both sides of the band join; shared()
+    # materializes the (doc_id, sig) frame once — no shingle arrays are kept
+    sigs = shared(minhash_signatures(docs, n_hashes, shingle_n))
+    band_keys = [
+        F.md5(F.concat(F.lit(f"{b}#"), F.array_join(F.slice("sig", b * r + 1, r).cast("array<string>"), ",")))
+        for b in range(bands)
+    ]
+    banded = sigs.select("doc_id", F.explode(F.array(*band_keys)).alias("band_key"))
     left = banded.select(F.col("doc_id").alias("doc_a"), "band_key")
     right = banded.select(F.col("doc_id").alias("doc_b"), "band_key")
     if salt == "auto":
@@ -200,10 +207,18 @@ def minhash_lsh_pairs(
         join_keys = ["band_key", "s"]
     else:
         join_keys = ["band_key"]
-    pairs = (
+    # candidate id pairs, materialized once: they feed the candidate-doc
+    # filter below and the verification join
+    pairs = shared(
         left.join(right, join_keys).filter(F.col("doc_a") < F.col("doc_b")).select("doc_a", "doc_b").distinct()
     )
-    sh = sigs.select("doc_id", "shingles")
+    # exact-Jaccard verification needs shingle SETS, but only for docs in some
+    # candidate pair (a near-dup minority of the corpus): the oracle formula
+    # runs on those docs alone, then attaches once per side
+    cand_ids = pairs.select(F.col("doc_a").alias("doc_id")).union(pairs.select(F.col("doc_b").alias("doc_id")))
+    sh = docs.join(cand_ids, "doc_id", "left_semi").select(
+        "doc_id", word_shingles(F.col("text"), shingle_n).alias("shingles")
+    )
     pairs = (
         pairs.join(sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")), "doc_a")
         .join(sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")), "doc_b")
@@ -260,7 +275,7 @@ def ngram_jaccard_pairs(docs: DataFrame, shingle_n: int = 3, threshold: float = 
         _fan_out(docs)
         .select("doc_id", "text", word_shingles(F.col("text"), shingle_n).alias("shingles"))
         .filter(F.size("shingles") > 0)
-        .transform(lambda d: shared(d, arrays=True))  # blocking + both join sides (see minhash note)
+        .transform(shared)  # blocking + both join sides
     )
     keyed = sh.select("doc_id", F.explode(_min_shingle_band_keys()).alias("block"))
     pairs = (
@@ -390,8 +405,7 @@ def duplicated_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     # (CollapseProject keeps the boundary: toks is non-cheap and referenced
     # more than once); textually inlining the split in the gram lambda would
     # re-run the regexp+split per gram ELEMENT.
-    words = "split(trim(regexp_replace(lower(coalesce(text, '')), '\\\\W+', ' ')), ' ')"
-    grams = docs.select("doc_id", F.expr(words).alias("toks")).select(
+    grams = docs.select("doc_id", F.expr(WORDS).alias("toks")).select(
         "doc_id",
         F.expr(
             f"case when size(toks) >= {n} then "

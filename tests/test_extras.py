@@ -160,6 +160,96 @@ def test_minhash_salt_preserves_pairs(docs):
     assert base == salted and len(base) > 0
 
 
+# adversarial signature inputs: NULL, empty, 1-2 words, punctuation only, one
+# repeated 3-gram, accented words (non-ASCII letters are \W to Java's regex
+# and to RE2, so they split words), plus near-duplicate docs so the pair
+# stage has work
+ADVERSARIAL_DOCS = [
+    (1, None),
+    (2, ""),
+    (3, "hello"),
+    (4, "hello world"),
+    (5, "?!... --- ;;"),
+    (6, "la la la la la la"),
+    (7, "La, la; LA la -- la!"),
+    (8, "Café résumé naïve façade déjà vu über straße"),
+    (9, "café résumé naïve façade déjà vu über strasse"),
+    (10, "the quick brown fox jumps over the lazy dog near the river bank today"),
+    (11, "The quick brown fox jumps over the lazy dog near the river bank, today!"),
+    (12, "the quick brown fox jumps over the lazy cat near the river bank today"),
+    (13, "an entirely different sentence about spark sql and its optimizer rules"),
+]
+
+
+def _py_minhash(text, n_hashes=12, n=3):
+    """The documented signature formula in plain Python: Java's \\W is
+    [^A-Za-z0-9_] (no Unicode classes), split on single spaces after trim."""
+    import hashlib
+    import re
+
+    p = 2_147_483_647
+    words = re.sub(r"[^A-Za-z0-9_]+", " ", (text or "").lower()).strip(" ").split(" ")
+    shingles = {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
+    if not shingles:
+        return None
+    base = [int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % p for s in shingles]
+    return [min(((1 + h * 1000003) * b + 12345 + h * 7919) % p for b in base) for h in range(n_hashes)]
+
+
+def _duck_minhash_pairs(rows):
+    """O_DEDUP_MINHASH (the dedup_minhash_lsh contract oracle) over `rows`."""
+    import pyarrow as pa
+
+    from reden_spark.driver_contract import O_DEDUP_MINHASH
+
+    con = duckdb.connect()
+    con.register("documents", pa.table({"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]}))
+    return {tuple(r) for r in con.sql(O_DEDUP_MINHASH).fetchall()}
+
+
+def test_minhash_signatures_adversarial_match_python_formula(spark):
+    from reden_spark.operators.dedup import minhash_signatures
+
+    docs = spark.createDataFrame(ADVERSARIAL_DOCS, "doc_id long, text string")
+    got = {r.doc_id: list(r.sig) for r in minhash_signatures(docs, 12, 3).collect()}
+    want = {i: sig for i, t in ADVERSARIAL_DOCS if (sig := _py_minhash(t)) is not None}
+    assert got == want
+    # short, empty, NULL and punctuation-only docs have no shingle -> no row;
+    # the repeated 3-gram doc has exactly one shingle
+    assert not {1, 2, 3, 4, 5} & set(got) and {6, 7} <= set(got)
+    assert got[6] == got[7]
+
+
+def test_minhash_lsh_pairs_adversarial_vs_duckdb(spark):
+    from reden_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.createDataFrame(ADVERSARIAL_DOCS, "doc_id long, text string")
+    got = {tuple(r) for r in minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect()}
+    want = _duck_minhash_pairs(ADVERSARIAL_DOCS)
+    assert got == want
+    assert {(6, 7), (10, 11)} <= {(a, b) for a, b, _ in got}
+
+
+def test_minhash_lsh_pairs_all_candidates_vs_duckdb(spark):
+    """Every doc shares every band (one normalized text, varied case and
+    punctuation) and half the corpus carries a near-dup tail: every doc is a
+    candidate, so the shingle re-attach covers the whole corpus."""
+    from reden_spark.operators.dedup import minhash_lsh_pairs
+
+    body = "a shared paragraph of boilerplate text that every single document in this corpus repeats"
+    rows = [(i, body.upper() + "!" if i % 3 == 0 else body) for i in range(30)]
+    rows += [(100 + i, f"{body} tail{i} words{i}") for i in range(30)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _duck_minhash_pairs(rows)
+    assert len({(a, b) for a, b, j in want if j == 1.0}) >= 30 * 29 // 2
+    for salt in ("auto", 4):
+        got = {tuple(r) for r in minhash_lsh_pairs(docs, 12, 3, 4, 0.5, salt=salt).collect()}
+        assert got == want, salt
+    # threshold 0 keeps every candidate pair: each doc is in one
+    cand = minhash_lsh_pairs(docs, 12, 3, 4, 0.0).collect()
+    assert {d for r in cand for d in (r.doc_a, r.doc_b)} == {r[0] for r in rows}
+
+
 def test_simhash_pairs_match_bruteforce(docs):
     """Pigeonhole guarantee: with n_chunks >= max_hamming+1 derived chunks, the
     chunk-blocked pair set equals the brute-force all-pairs set within
@@ -675,21 +765,6 @@ def test_ivf_pq_topk_shape_and_candidate_parity(emb):
     exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, qids, k=5).collect()}
     approx = {(r.query_id, r.neighbor_id) for r in rows}
     assert len(exact & approx) / len(exact) > 0.05  # sanity floor only
-
-
-def test_dedup_lazy_shared_mode_same_pairs(spark, monkeypatch):
-    """REDEN_SHARED_SUBTREE=lazy must leave the dedup pair sets byte-identical
-    (the dedup operators route their signature/shingle frames through
-    checkpointing.shared() too, not just the links stage)."""
-    from reden_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base_mh = sorted(map(tuple, minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect()))
-    base_ng = sorted(map(tuple, ngram_jaccard_pairs(docs, 3, 0.8).collect()))
-    monkeypatch.setenv("REDEN_SHARED_SUBTREE", "lazy")
-    assert sorted(map(tuple, minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect())) == base_mh
-    assert sorted(map(tuple, ngram_jaccard_pairs(docs, 3, 0.8).collect())) == base_ng
-    assert base_mh and base_ng
 
 
 def test_null_text_behaves_as_empty(spark, duck):

@@ -17,19 +17,6 @@ def run_stages(spark, tables):
     return mentions, candidates, cases, links
 
 
-def test_shared_subtree_lazy_and_hybrid_modes_same_links(spark, tables, monkeypatch):
-    """REDEN_SHARED_SUBTREE=lazy and =hybrid (the documented no-barrier /
-    narrow-frames-only persist variants of checkpointing.shared(), BENCH.md
-    round 4) must produce links identical to the default eager mode."""
-    _, _, _, links_eager = run_stages(spark, tables)
-    base = sorted(map(tuple, links_eager.collect()))
-    assert len(base) > 100
-    for mode in ("lazy", "hybrid"):
-        monkeypatch.setenv("REDEN_SHARED_SUBTREE", mode)
-        _, _, _, links_alt = run_stages(spark, tables)
-        assert sorted(map(tuple, links_alt.collect())) == base, mode
-
-
 def test_mentions_match_oracle(spark, tables, py_tables):
     from reden_spark.functions.gazetteer import GazetteerMatcher
 
@@ -272,6 +259,30 @@ def test_connected_components_fixpoint_at_iteration_budget(spark):
         for r in connected_components(edges, max_iter=0, driver_max_edges=None).collect()
     }
     assert got == {"u1": "u1", "u2": "u1"}
+
+
+def test_connected_components_paths_agree_on_degenerate_edges(spark):
+    """The driver union-find path (an Arrow-backed local relation) and the
+    distributed loop return equal rows and string columns on an empty edge
+    list and on duplicate, reversed and self edges."""
+    from reden_spark.operators.canonicalize import connected_components
+
+    cases = {
+        "empty": [],
+        "dup_self": [("b", "a"), ("b", "a"), ("a", "b"), ("c", "c"), ("d", "d"), ("d", "e")],
+    }
+    for name, rows in cases.items():
+        edges = spark.createDataFrame(rows, "a string, b string")
+        out = {}
+        for dme in (500_000, None):
+            df = connected_components(edges, driver_max_edges=dme)
+            assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+                ("uri", "string"),
+                ("canonical", "string"),
+            ], (name, dme)
+            out[dme] = sorted(map(tuple, df.collect()))
+        assert out[500_000] == out[None], name
+    assert out[None] == [("a", "a"), ("b", "a"), ("c", "c"), ("d", "d"), ("e", "d")]
 
 
 def test_per_turn_text_equality_invariant(spark, tables, fixture_dir):

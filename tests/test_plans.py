@@ -356,6 +356,18 @@ def test_curation_plan_shapes(spark):
     assert n == 3 and "BroadcastHashJoin" in p, p[:1500]
 
 
+def test_minhash_signature_plan_has_no_lambda(spark):
+    """Higher-order functions are CodegenFallback (interpreted per array
+    element): the corpus-wide signature pass must be an explode of shingle
+    occurrences plus one hash aggregate, with no lambda anywhere in the plan."""
+    from reden_spark.operators.dedup import minhash_signatures
+
+    docs = spark.createDataFrame([(1, "one two three four")], "doc_id long, text string")
+    p = plan(minhash_signatures(docs, 12, 3))
+    assert "lambdafunction" not in p.lower(), p
+    assert "Generate" in p and "HashAggregate" in p
+
+
 def test_chunk_windows_is_map_only(spark):
     """Sliding-window chunking must stay a single map-only pass: tokenize,
     generate chunk indices, slice, hash — no Exchange at any corpus size."""
